@@ -239,14 +239,18 @@ def _load_redactions(arg: str):
     return decode_redactions(arg)
 
 
-def _emit(batch_df, out: str, epoch: int) -> None:
-    from .streaming.sinks import event_to_json_line, jsonl_dir_writer
+def _print_rows(rows: list[dict], epoch: int) -> None:
+    """`--out -` for seq-ordered rows: one JSON line per event."""
+    from .streaming.sinks import event_to_json_line
 
-    if out == "-":
-        for r in batch_df.orderBy("seq").toLocalIterator():
-            print(event_to_json_line(r.asDict()), flush=True)
-    else:
-        jsonl_dir_writer(out)(batch_df, epoch)
+    for row in rows:
+        print(event_to_json_line(row), flush=True)
+
+
+def _emit(batch_df, epoch: int) -> None:
+    from .streaming.sinks import collect_sorted
+
+    _print_rows(collect_sorted(batch_df), epoch)
 
 
 def _run_sqlite(args, stop: threading.Event) -> int:
@@ -280,7 +284,7 @@ def _run_sqlite(args, stop: threading.Event) -> int:
     if args.replay_from is not None:
         poller.rewind(args.replay_from)
     if args.out == "-":
-        emit = lambda df, ep: _emit(df, "-", ep)  # noqa: E731
+        emit = _emit
     else:
         from .streaming.sinks import jsonl_seq_writer
 
@@ -404,7 +408,7 @@ def _run_postgres(args, stop: threading.Event) -> int:
     if args.replay_from is not None:
         poller.rewind(args.replay_from)
     if args.out == "-":
-        emit = lambda df, ep: _emit(df, "-", ep)  # noqa: E731
+        emit = _emit
     else:
         from .streaming.sinks import jsonl_seq_writer
 
@@ -532,7 +536,7 @@ def _run_postgres_notify(args, stop: threading.Event, runner) -> int:
     spark = get_spark("pqstream-daemon")
     redactions = _load_redactions(args.redactions)
     if args.out == "-":
-        emit = lambda df, ep: _emit(df, "-", ep)  # noqa: E731
+        emit = _emit
     else:
         import time as _time
 
@@ -755,7 +759,7 @@ def _run_postgres_logical(args, stop: threading.Event, runner) -> int:
               "is under retention pressure — drain faster or raise "
               "max_slot_wal_keep_size", file=sys.stderr)
     if args.out == "-":
-        emit = lambda df, ep: _emit(df, "-", ep)  # noqa: E731
+        emit = _emit
     else:
         from .streaming.sinks import jsonl_seq_writer
 
@@ -967,7 +971,7 @@ def _run_postgres_logical_sharded(args, stop: threading.Event,
                   f"{h['wal_status']!r} — WAL under retention pressure",
                   file=sys.stderr)
     if args.out == "-":
-        emit = lambda df, ep: _emit(df, "-", ep)  # noqa: E731
+        emit = _emit
     else:
         from .streaming.sinks import jsonl_seq_writer
 
@@ -1061,33 +1065,40 @@ def _run_postgres_logical_sharded(args, stop: threading.Event,
 
 _ACTIVE_WIRE = None  # set while the --listen-http wire server is up
 
+# Changelog files per directory-daemon micro-batch. The Dispatcher
+# collects each batch onto the driver (and collect() is capped by
+# spark.driver.maxResultSize), so a cold start over a long retained
+# changelog must not arrive as one batch. A live feed never comes near
+# it: at one file per 100 ms, 64 files are 6.4 s of backlog.
+DIR_MAX_FILES_PER_TRIGGER = 64
+
 
 def _run_changelog_dir(args, stop: threading.Event) -> int:
+    from .pipeline import handle_events
     from .session import get_spark
-    from .streaming.subscribe import SubscriptionManager
     from .streaming.source import stream_changelog
+    from .streaming.subscribe import Dispatcher
 
     spark = get_spark("pqstream-daemon")
-    mgr = SubscriptionManager(
-        lambda: stream_changelog(spark, args.connect),
-        redactions=_load_redactions(args.redactions),
+    redactions = _load_redactions(args.redactions)
+    tables = args.tables or ".*"
+    # ONE query for every consumer: the --out sink and the wire clients
+    # share each micro-batch's single collect (Dispatcher.start's sink),
+    # so a batch is listed, planned and handled once
+    disp = Dispatcher(
+        handle_events(
+            stream_changelog(
+                spark, args.connect,
+                max_files_per_trigger=DIR_MAX_FILES_PER_TRIGGER,
+            ),
+            redactions=redactions,
+            table_regexp=tables,
+            typed_wire=True,
+        )
     )
     wire = None
     if args.listen_http is not None:
-        from .pipeline import handle_events
-        from .streaming.subscribe import Dispatcher
         from .streaming.wire_http import WireServer
-
-        # wire clients get the full handled chain (parse → redact →
-        # merge-patch), each with their own per-request table regexp
-        disp = Dispatcher(
-            handle_events(
-                stream_changelog(spark, args.connect),
-                redactions=_load_redactions(args.redactions),
-                table_regexp=args.tables or ".*",
-                typed_wire=True,
-            )
-        )
 
         def _history(from_seq: int):
             # consumer resume (/listen?from_seq=N): batch-scan the
@@ -1100,8 +1111,8 @@ def _run_changelog_dir(args, stop: threading.Event) -> int:
 
             df = handle_events(
                 batch_changelog(spark, args.connect),
-                redactions=_load_redactions(args.redactions),
-                table_regexp=args.tables or ".*",
+                redactions=redactions,
+                table_regexp=tables,
                 typed_wire=True,
             )
             it = (
@@ -1113,39 +1124,40 @@ def _run_changelog_dir(args, stop: threading.Event) -> int:
 
         wire = WireServer(disp, port=args.listen_http, history=_history)
         wire.start_background()
-        disp.start()
+    if args.out == "-":
+        sink = _print_rows
+    else:
+        from .streaming.sinks import jsonl_rows_writer
+
+        sink = jsonl_rows_writer(args.out)
+    q = disp.start(sink=sink, checkpoint_dir=args.checkpoint)
+    if wire is not None:
         global _ACTIVE_WIRE  # observable handle for tests/tooling
         _ACTIVE_WIRE = wire
         print(f"Listen wire serving on {wire.url}/listen", file=sys.stderr)
-    out = args.out
-    q = mgr.listen(
-        "daemon",
-        table_regexp=args.tables or ".*",
-        foreach_batch=lambda df, epoch: _emit(df, out, epoch),
-        checkpoint_dir=args.checkpoint,
-        typed_wire=True,
-    )
-    if args.once:
-        q.processAllAvailable()
-    else:
-        while not stop.is_set() and q.isActive:
-            stop.wait(1.0)
+    try:
+        if args.once:
+            q.processAllAvailable()
+        else:
+            while not stop.is_set() and q.isActive:
+                stop.wait(1.0)
+    finally:
         # Drain the in-flight micro-batch before stopping: SIGINT must
-        # leave a complete, parseable output (the reference gives its
-        # server a 10 s graceful-shutdown budget before the hard exit,
+        # leave a complete, parseable output and Listen clients must
+        # see the same batch (the reference gives its server a 10 s
+        # graceful-shutdown budget before the hard exit,
         # cmd/pqsd/main.go:113-118 — same contract here: finish the
         # work already read, then stop).
-        try:
-            q.processAllAvailable()
-        except Exception:
-            pass  # stream already terminal: nothing in flight to drain
-    if wire is not None:
-        # drain the wire dispatcher's own query too — Listen clients
-        # must see the same in-flight batch the jsonl output got
-        wire.dispatcher.stop(drain=True)
-        wire.stop()
-        _ACTIVE_WIRE = None  # don't leak a dead server handle
-    mgr.stop_all()
+        disp.stop(drain=True)
+        if wire is not None:
+            wire.stop()
+            _ACTIVE_WIRE = None  # don't leak a dead server handle
+    err = q.exception()
+    if err is not None:
+        # the query died (a sink error, a batch over maxResultSize):
+        # the wait loop saw it go inactive, but that is no clean stop
+        print(f"the fan-out query failed: {err}", file=sys.stderr)
+        return 1
     return 0
 
 
@@ -1348,11 +1360,22 @@ def main(argv: list[str] | None = None) -> int:
     args = build_parser().parse_args(argv)
     stop = threading.Event()
 
-    # SIGINT → graceful stop (ctxutil/background_signals.go:12-22 parity)
+    # SIGINT → graceful stop (ctxutil/background_signals.go:12-22
+    # parity), for this call only: an in-process caller gets its own
+    # handlers back, so Ctrl-C works again after main() returns
+    saved = {}
     if threading.current_thread() is threading.main_thread():
-        signal.signal(signal.SIGINT, lambda *_: stop.set())
-        signal.signal(signal.SIGTERM, lambda *_: stop.set())
+        for sig in (signal.SIGINT, signal.SIGTERM):
+            saved[sig] = signal.signal(sig, lambda *_: stop.set())
+    try:
+        return _main(args, stop)
+    finally:
+        for sig, handler in saved.items():
+            if handler is not None:  # None: not set from Python
+                signal.signal(sig, handler)
 
+
+def _main(args, stop: threading.Event) -> int:
     if args.parallel_read is not None and (
         not args.connect.startswith("postgres:")
         or args.transport != "outbox"

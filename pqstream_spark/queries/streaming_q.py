@@ -77,26 +77,30 @@ def _run_to_completion(df: DataFrame, output_mode: str) -> DataFrame:
         pf_prev = df.sparkSession.conf.get(pf_key)
     except Exception:
         pf_prev = None
-    df.sparkSession.conf.set(pf_key, "true")
-    t0 = time.perf_counter()
-    w = (
-        df.writeStream.format("memory")
-        .queryName(name)
-        .outputMode(output_mode)
-    )
-    if ckpt:
-        w = w.option("checkpointLocation", ckpt)
-    q = w.start()
-    start_sec = time.perf_counter() - t0
+    # set, start and drain sit in ONE try: a start() that throws must
+    # still hand the session its own coalescing conf back
+    q = None
     progress: list[dict] = []
     try:
+        df.sparkSession.conf.set(pf_key, "true")
+        t0 = time.perf_counter()
+        w = (
+            df.writeStream.format("memory")
+            .queryName(name)
+            .outputMode(output_mode)
+        )
+        if ckpt:
+            w = w.option("checkpointLocation", ckpt)
+        q = w.start()
+        start_sec = time.perf_counter() - t0
         q.processAllAvailable()
         # StreamingQueryProgress objects (pyspark 4); .json is the
         # stable cross-version accessor
         progress = [json.loads(p.json) for p in (q.recentProgress or [])]
     finally:
-        q.stop()
-        q.awaitTermination()
+        if q is not None:
+            q.stop()
+            q.awaitTermination()
         if ckpt:
             shutil.rmtree(ckpt, ignore_errors=True)
         if pf_prev is None:

@@ -65,32 +65,48 @@ def event_to_json_line(row: dict, include_seq: bool = False) -> str:
     return json.dumps(out, separators=(",", ":"))
 
 
-def jsonl_dir_writer(out_dir: str) -> Callable[[DataFrame, int], None]:
-    """foreachBatch sink: one .jsonl file per micro-batch, rows in seq
-    order. Global order across a micro-batch needs a single partition —
-    acceptable ONLY at the final sink hop (SURVEY.md §3.4); everything
-    upstream stays parallel."""
+def collect_sorted(batch_df: DataFrame) -> list[dict]:
+    """One micro-batch as `Row.asDict()` dicts in `seq` order: a single
+    collect() (one Spark job) and a sort on the driver.
+
+    `orderBy("seq").toLocalIterator()` cost a range-partition sample
+    job, a shuffle and a result job per batch, and the typed-wire UDF
+    (operators/merge_patch.py) ran in both the sample and the
+    shuffle-map stage. The trade-off: driver memory is bounded by one
+    micro-batch, not by one post-sort partition. Under the session's
+    size-first AQE coalescing (64 MB) a small batch was already a
+    single partition, so live batches hold what they held before."""
+    return sorted((r.asDict() for r in batch_df.collect()), key=lambda d: d["seq"])
+
+
+def jsonl_rows_writer(out_dir: str) -> Callable[[list[dict], int], None]:
+    """Sink for already-collected, seq-ordered rows: one
+    `batch-{epoch:08d}.jsonl` per non-empty micro-batch. Written to a
+    .tmp then renamed: a SIGKILL mid-batch leaves only tmp junk
+    (readers match *.jsonl), and the checkpoint's re-run of the same
+    epoch rewrites the same final name — the idempotent-sink half of
+    the exactly-once contract."""
     os.makedirs(out_dir, exist_ok=True)
 
-    def write(batch_df: DataFrame, epoch_id: int) -> None:
-        # stream the sorted batch through the driver a partition at a
-        # time (toLocalIterator) — the file is written incrementally, so
-        # driver memory is bounded by one partition, not the micro-batch.
-        # Written to a .tmp then renamed: a SIGKILL mid-batch leaves
-        # only tmp junk (readers match *.jsonl), and the checkpoint's
-        # re-run of the same epoch rewrites the same final name — the
-        # idempotent-sink half of the exactly-once contract.
+    def write(rows: list[dict], epoch_id: int) -> None:
+        if not rows:
+            return
         path = os.path.join(out_dir, f"batch-{epoch_id:08d}.jsonl")
         tmp = path + ".tmp"
-        wrote = False
         with open(tmp, "w") as f:
-            for r in batch_df.orderBy("seq").toLocalIterator():
-                f.write(event_to_json_line(r.asDict()) + "\n")
-                wrote = True
-        if wrote:
-            os.replace(tmp, path)
-        else:
-            os.remove(tmp)
+            f.writelines(event_to_json_line(r) + "\n" for r in rows)
+        os.replace(tmp, path)
+
+    return write
+
+
+def jsonl_dir_writer(out_dir: str) -> Callable[[DataFrame, int], None]:
+    """foreachBatch sink: one .jsonl file per micro-batch, rows in seq
+    order (collect_sorted — the driver holds one micro-batch)."""
+    write_rows = jsonl_rows_writer(out_dir)
+
+    def write(batch_df: DataFrame, epoch_id: int) -> None:
+        write_rows(collect_sorted(batch_df), epoch_id)
 
     return write
 

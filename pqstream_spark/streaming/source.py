@@ -53,8 +53,9 @@ EVENTS_FILE_SCHEMA = _events_file_schema(T.LongType())
 # in-place part-file rewrite, or files landing inside a partition
 # subdirectory, would leave it unchanged — so the directory signature
 # additionally folds in a recursive (part-file count, max mtime_ns)
-# over *.parquet (the same walk _has_parquet already pays). A fresh
-# process starts empty. Never holds data, only a dtype string.
+# over *.parquet — a full walk of its own (_has_parquet's walk stops at
+# the first part-file). A fresh process starts empty. Never holds data,
+# only a dtype string.
 _TS_DTYPE_MEMO: dict[tuple, str] = {}
 
 

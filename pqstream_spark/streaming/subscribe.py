@@ -5,13 +5,15 @@ dynamic subscribers, each filtering by its own table regexp over an
 UNBUFFERED channel — a slow client stalls the whole loop
 (`/root/reference/server.go:249-315`, head-of-line TODO at :291).
 
-Spark-first redesign: each subscriber is its own StreamingQuery over
-the shared source. Isolation is structural — a slow sink slows only
-its own query; there is no shared event loop to stall. Dynamic
-subscribe/unsubscribe = start/stop of queries at runtime, which
-Structured Streaming supports natively. Ordering within a subscriber
-is by `seq` (the reference's implicit total order made explicit —
-SURVEY.md §3.4).
+Two topologies. `SubscriptionManager`: each subscriber is its own
+StreamingQuery over the shared source. Isolation is structural — a
+slow sink slows only its own query; there is no shared event loop to
+stall. Dynamic subscribe/unsubscribe = start/stop of queries at
+runtime, which Structured Streaming supports natively. `Dispatcher`:
+the reference's one event loop as one StreamingQuery whose micro-batch
+is collected once and multicast; the daemon runs this one, with its
+--out sink on the same query. Ordering within a subscriber is by `seq`
+(the reference's implicit total order made explicit — SURVEY.md §3.4).
 """
 
 from __future__ import annotations
@@ -27,6 +29,7 @@ from pyspark.sql.streaming import StreamingQuery
 from ..operators.filters import compile_or_raise
 from ..pipeline import handle_events
 from ..operators.redact import FieldRedactions
+from .sinks import collect_sorted
 
 
 class SubscriptionManager:
@@ -243,6 +246,10 @@ class Dispatcher:
     A callback returning False unsubscribes (subscription.fn parity,
     server.go:30-33). Registration/removal is effective from the next
     micro-batch (buffered removal also mid-batch).
+
+    Each micro-batch is one collect() and a driver-side seq sort
+    (sinks.collect_sorted): one Spark job, with driver memory bounded
+    by one micro-batch rather than one post-sort partition.
     """
 
     def __init__(self, events: DataFrame) -> None:
@@ -303,21 +310,32 @@ class Dispatcher:
             },
         }
 
-    def start(self, trigger: dict | None = None) -> StreamingQuery:
+    def start(
+        self,
+        trigger: dict | None = None,
+        sink: Callable[[list[dict], int], None] | None = None,
+        checkpoint_dir: str | None = None,
+    ) -> StreamingQuery:
+        """Start the fan-out query. `sink(rows, epoch_id)`, when given,
+        receives every micro-batch's seq-ordered rows before they are
+        multicast — the daemon's --out rides the same query, so one
+        micro-batch costs one Spark job however many consumers it has.
+        The sink sees every batch, subscribers or not; a sink error
+        fails the batch before any subscriber saw it, so the restart
+        replay from `checkpoint_dir` delivers it once."""
+
         def dispatch(batch_df: DataFrame, epoch_id: int) -> None:
-            if not self._subs:
+            if not self._subs and sink is None:
                 return
-            # toLocalIterator streams the sorted batch one partition at a
-            # time — driver memory is bounded by a partition, not the
-            # micro-batch (collect() here was the classic driver
-            # bottleneck: "many cheap subscribers" routed the full event
-            # stream through one list). Rows arrive in global seq order;
-            # each is multicast to the surviving subscribers — the
-            # reference's event-loop shape (server.go:249-267).
-            for r in batch_df.orderBy("seq").toLocalIterator():
+            # Rows are multicast in global seq order to the surviving
+            # subscribers — the reference's event-loop shape
+            # (server.go:249-267).
+            rows = collect_sorted(batch_df)
+            if sink is not None:
+                sink(rows, epoch_id)
+            for row in rows:
                 if not self._subs:
                     break
-                row = r.asDict()
                 self.dispatched += 1
                 for name, sub in list(self._subs.items()):
                     if not sub.pattern.search(row["table_name"] or ""):
@@ -328,6 +346,8 @@ class Dispatcher:
         writer = self._events.writeStream.foreachBatch(dispatch).queryName(
             "pqstream_dispatcher"
         )
+        if checkpoint_dir:
+            writer = writer.option("checkpointLocation", checkpoint_dir)
         if trigger:
             writer = writer.trigger(**trigger)
         self._query = writer.start()

@@ -16,7 +16,9 @@ and renderer; nothing below the framing changes.
 
 Backpressure semantics DEFAULT to the reference's: the event loop
 writes to each client inline, so a slow client delays the batch for
-everyone (the unbuffered channel at server.go:291). Bounded
+everyone (the unbuffered channel at server.go:291) — in the directory
+daemon that includes its --out sink, which rides the same query and
+gets no next batch while an inline write blocks. Bounded
 micro-batches (maxFilesPerTrigger / OutboxPoller.max_rows) cap how
 much a stall can hold in flight. Unlike the reference, a client may
 opt OUT of head-of-line blocking per connection —

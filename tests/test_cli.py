@@ -373,3 +373,243 @@ def test_cli_lag_reports_per_consumer_backlog(tmp_path, capsys):
     assert main(["--connect", str(tmp_path), "--lag"]) == 2
     assert main(["--connect", "postgres:dbname=x", "--transport",
                  "notify", "--lag"]) == 2
+
+
+def test_main_restores_signal_handlers(spark, tmp_path):
+    """main() takes SIGINT/SIGTERM for its graceful stop and hands the
+    caller's handlers back on every return path, so Ctrl-C still works
+    for an in-process caller afterwards."""
+    import signal
+
+    before = {s: signal.getsignal(s) for s in (signal.SIGINT, signal.SIGTERM)}
+    assert main(["--connect", str(tmp_path / "nope"), "--once"]) == 2
+    src = str(tmp_path / "empty_src")
+    os.makedirs(src)
+    assert main(["--connect", src, "--out", str(tmp_path / "o"),
+                 "--once"]) == 0
+    after = {s: signal.getsignal(s) for s in before}
+    assert after == before
+
+
+def _stage_events(spark, sf_dir, tmp_path, n, offset=0):
+    """Path of a one-file parquet with events offset..offset+n-1 (in
+    event_id order) of sf_dir."""
+    stage = str(tmp_path / f"stage{offset}_{n}")
+    ev = spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
+    ev.orderBy("event_id").offset(offset).limit(n).coalesce(1) \
+      .write.parquet(stage)
+    part = [f for f in os.listdir(stage) if f.endswith(".parquet")][0]
+    return os.path.join(stage, part)
+
+
+def _jsonl_lines(out):
+    lines = []
+    for f in sorted(os.listdir(out)):
+        if f.endswith(".jsonl"):
+            with open(os.path.join(out, f)) as fh:
+                lines += [l.rstrip("\n") for l in fh if l.strip()]
+    return lines
+
+
+@pytest.mark.parametrize("listen", [False, True])
+def test_cli_directory_daemon_runs_one_query(spark, sf_dir, tmp_path, listen):
+    """The directory daemon is ONE StreamingQuery with or without
+    --listen-http: --out rides the Dispatcher's micro-batch instead of
+    a second query that lists, plans and handles every batch again.
+    With a wire, the --out lines equal a `.*` wire subscriber's lines
+    with seq removed."""
+    import http.client
+    import shutil
+    import threading
+    import time
+
+    import pqstream_spark.__main__ as cli
+
+    src = str(tmp_path / "src")
+    out = str(tmp_path / "out")
+    os.makedirs(src)
+    part = _stage_events(spark, sf_dir, tmp_path, 120)
+    argv = ["--connect", src, "--out", out]
+    if listen:
+        argv += ["--listen-http", "0"]
+    args = build_parser().parse_args(argv)
+    before = {q.id for q in spark.streams.active}
+    stop = threading.Event()
+    t = threading.Thread(target=cli._run_changelog_dir, args=(args, stop))
+    t.start()
+    try:
+        deadline = time.time() + 60
+        while time.time() < deadline and not (
+            {q.id for q in spark.streams.active} - before
+            and (not listen or cli._ACTIVE_WIRE is not None)
+        ):
+            time.sleep(0.1)
+        got = []
+        if listen:
+            host, port = cli._ACTIVE_WIRE.server_address[:2]
+            conn = http.client.HTTPConnection(host, port, timeout=90)
+            conn.request("GET", "/listen?tables=.*&with_seq=1")
+            resp = conn.getresponse()
+            assert resp.status == 200
+            while (time.time() < deadline
+                   and not cli._ACTIVE_WIRE.dispatcher.subscribers()):
+                time.sleep(0.05)
+        shutil.copy(part, os.path.join(src, "b1.parquet"))
+        if listen:
+            got = [resp.fp.readline().decode().rstrip("\n")
+                   for _ in range(120)]
+            conn.close()
+        while time.time() < deadline and len(_jsonl_lines(out)) < 120:
+            time.sleep(0.1)
+        new = [q for q in spark.streams.active if q.id not in before]
+        assert len(new) == 1, [q.name for q in new]
+    finally:
+        stop.set()
+        t.join(timeout=120)
+    assert not t.is_alive()
+    out_lines = _jsonl_lines(out)
+    assert len(out_lines) == 120
+    if listen:
+        seqs, bare = [], []
+        for line in got:
+            ev = json.loads(line)
+            seqs.append(ev.pop("seq"))
+            bare.append(json.dumps(ev, separators=(",", ":")))
+        assert seqs == sorted(seqs)
+        assert bare == out_lines
+
+
+def test_cli_directory_daemon_drains_backlog_in_bounded_batches(
+        spark, sf_dir, tmp_path, monkeypatch):
+    """A cold start over a retained changelog longer than one
+    micro-batch drains it DIR_MAX_FILES_PER_TRIGGER files at a time
+    (the Dispatcher collects each batch onto the driver, so a backlog
+    must not arrive as one batch), and --out is complete: the same
+    lines in the same order as one unbounded batch."""
+    import shutil
+
+    import pqstream_spark.__main__ as cli
+
+    src = str(tmp_path / "src")
+    os.makedirs(src)
+    for i in range(5):
+        dst = os.path.join(src, f"f{i}.parquet")
+        shutil.copy(_stage_events(spark, sf_dir, tmp_path, 30, 30 * i), dst)
+        os.utime(dst, (1_700_000_000 + i, 1_700_000_000 + i))  # file order
+
+    def batches(out):
+        return [f for f in os.listdir(out) if f.endswith(".jsonl")]
+
+    capped, whole = str(tmp_path / "capped"), str(tmp_path / "whole")
+    monkeypatch.setattr(cli, "DIR_MAX_FILES_PER_TRIGGER", 2)
+    assert main(["--connect", src, "--out", capped, "--once"]) == 0
+    monkeypatch.setattr(cli, "DIR_MAX_FILES_PER_TRIGGER", None)
+    assert main(["--connect", src, "--out", whole, "--once"]) == 0
+    assert len(batches(capped)) == 3 and len(batches(whole)) == 1
+    assert len(_jsonl_lines(whole)) == 150
+    assert _jsonl_lines(capped) == _jsonl_lines(whole)
+
+
+@pytest.mark.parametrize("policy", [None, "drop-oldest"])
+def test_cli_stalled_listen_client_and_out(spark, sf_dir, tmp_path, policy):
+    """--out shares the directory daemon's one query with the Listen
+    clients. A client that never reads, on the default inline policy,
+    blocks the dispatch loop once its socket buffers fill: --out still
+    gets the batch in flight (the sink runs before the fan-out), but no
+    later batch until that client goes away. On a buffered policy the
+    same client stalls only its own queue and --out keeps writing."""
+    import shutil
+    import socket
+    import threading
+    import time
+
+    import pqstream_spark.__main__ as cli
+
+    with open("/proc/sys/net/ipv4/tcp_wmem") as f:
+        if int(f.read().split()[2]) > 6 << 20:
+            pytest.skip("send buffers can outgrow the 7 MB this test sends")
+    sf = os.path.join(os.path.dirname(sf_dir), "sf0.1")
+    # ~7 MB of lines: beyond the stalled socket's receive window plus
+    # the largest send buffer loopback autotuning grows (tcp_wmem max,
+    # 4 MB by default), so an inline write must block
+    n = 50_000
+    big = _stage_events(spark, sf, tmp_path, n)
+    small = _stage_events(spark, sf, tmp_path, 20, offset=n)
+    src, out = str(tmp_path / "src"), str(tmp_path / "out")
+    os.makedirs(src)
+    args = build_parser().parse_args(
+        ["--connect", src, "--out", out, "--listen-http", "0"])
+    stop = threading.Event()
+    rc = []
+    t = threading.Thread(
+        target=lambda: rc.append(cli._run_changelog_dir(args, stop)))
+    t.start()
+    slow = socket.socket(socket.AF_INET, socket.SOCK_STREAM)
+    try:
+        deadline = time.time() + 60
+        while cli._ACTIVE_WIRE is None and time.time() < deadline:
+            time.sleep(0.1)
+        wire = cli._ACTIVE_WIRE
+        assert wire is not None, "wire server never started"
+        disp = wire.dispatcher
+        # tiny receive window negotiated at connect, then never read
+        slow.setsockopt(socket.SOL_SOCKET, socket.SO_RCVBUF, 4096)
+        slow.connect(wire.server_address[:2])
+        qs = "tables=.*" + (f"&policy={policy}&buffer=4" if policy else "")
+        slow.sendall(f"GET /listen?{qs} HTTP/1.1\r\nHost: wire\r\n\r\n"
+                     .encode())
+        while not disp.subscribers() and time.time() < deadline:
+            time.sleep(0.05)
+        assert disp.subscribers()
+
+        def wait_lines(n, secs):
+            end = time.time() + secs
+            while len(_jsonl_lines(out)) < n and time.time() < end:
+                time.sleep(0.1)
+            return len(_jsonl_lines(out))
+
+        shutil.copy(big, os.path.join(src, "a.parquet"))
+        assert wait_lines(n, 180) == n
+        shutil.copy(small, os.path.join(src, "b.parquet"))
+        if policy is None:
+            # the loop sits in a blocked write mid-batch: batch b is
+            # visible to the source but never reaches --out
+            assert wait_lines(n + 20, 10) == n
+            assert disp.dispatched < n
+            slow.close()  # the client goes away: its write fails
+        assert wait_lines(n + 20, 120) == n + 20
+    finally:
+        slow.close()
+        stop.set()
+        t.join(timeout=120)
+    assert not t.is_alive() and rc == [0]
+
+
+def test_cli_directory_daemon_exits_nonzero_when_query_fails(
+        spark, sf_dir, tmp_path, monkeypatch):
+    """A fan-out query that dies (here: its --out sink raises) ends the
+    daemon's wait loop; that is a failure, not a clean stop, so the
+    daemon returns 1."""
+    import shutil
+    import threading
+
+    import pqstream_spark.__main__ as cli
+
+    def boom(rows, epoch):
+        raise RuntimeError("sink failed")
+
+    monkeypatch.setattr(cli, "_print_rows", boom)
+    src = str(tmp_path / "src")
+    os.makedirs(src)
+    shutil.copy(_stage_events(spark, sf_dir, tmp_path, 20),
+                os.path.join(src, "b1.parquet"))
+    args = build_parser().parse_args(["--connect", src, "--out", "-"])
+    stop = threading.Event()
+    rc = []
+    t = threading.Thread(
+        target=lambda: rc.append(cli._run_changelog_dir(args, stop)))
+    t.start()
+    t.join(timeout=120)
+    stop.set()
+    t.join(timeout=60)
+    assert not t.is_alive() and rc == [1]

@@ -557,12 +557,11 @@ def test_upsert_sink_rewrites_only_touched_buckets(spark, tmp_path):
 
 
 def test_dispatcher_multipartition_batch_stays_seq_ordered(spark, tmp_path):
-    """The driver-bottleneck fix (toLocalIterator instead of collect)
-    must preserve the global seq order across a MULTI-partition
-    micro-batch: after the sort, partitions are range-ordered and the
-    iterator drains them in order, holding at most one partition in
-    driver memory — the reference's single-goroutine total order
-    (server.go:258-281) without the reference's single-process cap."""
+    """The global seq order must survive a MULTI-partition
+    micro-batch: the Dispatcher collects the batch once and sorts it on
+    the driver (sinks.collect_sorted), so driver memory is bounded by
+    one micro-batch — the reference's single-goroutine total order
+    (server.go:258-281) from a batch read in parallel."""
     import os
 
     from pqstream_spark.streaming.source import stream_changelog
@@ -872,10 +871,12 @@ def test_ts_dtype_memo_key_sees_inplace_part_rewrite(tmp_path):
 
     # in-place rewrite of the SAME part-file: same name, same size,
     # top-level dir mtime unchanged — only the recursive max mtime moves
+    st = os.stat(d)
     _t.sleep(0.01)
     part.write_bytes(b"y" * 16)
-    os.utime(d)  # normalize: even if the OS touched the dir, the
-    # part-file mtime alone must already differ
+    # put the directory's own mtime back, so only the part-file mtime
+    # can change the key
+    os.utime(d, ns=(st.st_atime_ns, st.st_mtime_ns))
     k2 = _stat_signature(str(d))
     assert k2 != k1, "in-place part rewrite must change the memo key"
 
@@ -888,3 +889,85 @@ def test_ts_dtype_memo_key_sees_inplace_part_rewrite(tmp_path):
     # single FILE path keeps the plain (mtime, size) signature
     kf = _stat_signature(str(part))
     assert kf is not None and len(kf) == 3
+
+
+def test_dispatcher_batch_is_one_spark_job(spark, tmp_path):
+    """A non-empty micro-batch costs exactly one Spark job: the batch is
+    collected once and sorted on the driver, and the --out sink rides
+    the same collect. orderBy("seq").toLocalIterator() cost a sample
+    job, a shuffle and a result job per batch."""
+    import shutil
+
+    from pqstream_spark.streaming.subscribe import Dispatcher
+
+    src = str(tmp_path / "job_src")
+    os.makedirs(src)
+    stage = str(tmp_path / "job_stage")
+    ev = spark.read.parquet(f"{SF}/events.parquet")
+    ev.orderBy("event_id").limit(300).repartition(3).write.parquet(stage)
+    parts = sorted(f for f in os.listdir(stage) if f.endswith(".parquet"))
+
+    seen, sunk = [], []
+    disp = Dispatcher(handle_events(stream_changelog(spark, src),
+                                    typed_wire=True))
+    disp.subscribe("all", ".*", lambda row: (seen.append(row), True)[1])
+    q = disp.start(sink=lambda rows, epoch: sunk.append((epoch, rows)))
+    tracker = spark.sparkContext.statusTracker()
+    try:
+        for k in range(2):  # the second batch runs on warm code paths
+            for p in parts:
+                shutil.copy(os.path.join(stage, p),
+                            os.path.join(src, f"b{k}-{p}"))
+            before = set(tracker.getJobIdsForGroup(str(q.runId)))
+            q.processAllAvailable()
+            after = set(tracker.getJobIdsForGroup(str(q.runId)))
+            assert len(after - before) == 1, (k, sorted(after - before))
+    finally:
+        disp.stop()
+
+    assert [len(rows) for _e, rows in sunk] == [300, 300]
+    assert [e for e, _rows in sunk] == [0, 1]
+    # the sink and the subscriber saw the same seq-ordered dicts
+    assert [r for _e, rows in sunk for r in rows] == seen
+    for _e, rows in sunk:
+        seqs = [r["seq"] for r in rows]
+        assert seqs == sorted(seqs)
+
+
+def test_collect_sorted_matches_ordered_iterator(spark):
+    """collect_sorted is a drop-in for orderBy("seq").toLocalIterator():
+    the same dicts, and byte-identical rendered lines."""
+    from pqstream_spark.streaming.sinks import (
+        collect_sorted,
+        event_to_json_line,
+    )
+
+    df = handle_events(build_changelog(spark, SF), typed_wire=True)
+    df = df.repartition(4)
+    want = [r.asDict() for r in df.orderBy("seq").toLocalIterator()]
+    got = collect_sorted(df)
+    assert got == want
+    assert ([event_to_json_line(r) for r in got]
+            == [event_to_json_line(r) for r in want])
+
+
+def test_drain_restores_parallelism_first_when_start_fails(spark, tmp_path):
+    """_run_to_completion scopes parallelismFirst to its drain. A
+    start() that throws (here: complete mode without an aggregation)
+    must still give the session its own setting back."""
+    from pqstream_spark.queries.streaming_q import _run_to_completion
+
+    key = "spark.sql.adaptive.coalescePartitions.parallelismFirst"
+    src = str(tmp_path / "pf_src")
+    os.makedirs(src)
+    prev = spark.conf.get(key, None)
+    spark.conf.set(key, "false")
+    try:
+        with pytest.raises(Exception):
+            _run_to_completion(stream_changelog(spark, src), "complete")
+        assert spark.conf.get(key) == "false"
+    finally:
+        if prev is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, prev)
